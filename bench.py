@@ -90,7 +90,7 @@ def _load_cold_baseline() -> (
                 d = json.load(f)
             q = {k: float(v) for k, v in d["queries"].items()}
             sfl = d.get("shuffle_floor")
-            sfl = float(sfl) if sfl else None
+            sfl = float(sfl) if sfl is not None else None
             return q, float(d["host_floor"]), q["q_unpivot"], sfl, name
         except Exception as e:  # noqa: BLE001 — a malformed artifact
             # (list where a dict is expected, nulls) must degrade to the
@@ -452,7 +452,7 @@ def main() -> None:
         ),
         "baseline_shuffle_floor": base_shuffle,
         "shuffle_ratio": (
-            round(shuffle_ratio, 4) if shuffle_ratio else None
+            round(shuffle_ratio, 4) if shuffle_ratio is not None else None
         ),
         "floor_ratio": round(floor_ratio, 4),
         "canary_ratio": round(canary_ratio, 4),

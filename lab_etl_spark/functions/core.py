@@ -229,22 +229,6 @@ def normalize_key(col: Column | str) -> Column:
     return F.regexp_replace(snake, r"_+$|^_+", "")
 
 
-def split_name_unit(col: Column | str) -> Column:
-    """Header token ``'Temp./°C'`` → ``struct(name, unit)`` — the STA/MCC
-    column-header grammar (netzsch_sta_parser.py:326-357: split at first '/',
-    name standardized, remainder is the unit)."""
-    c = F.col(col) if isinstance(col, str) else col
-    has_slash = F.instr(c, "/") > 0
-    name_part = F.when(has_slash, F.substring_index(c, "/", 1)).otherwise(c)
-    unit_part = F.substr(c, F.instr(c, "/") + 1)
-    return F.struct(
-        normalize_key(name_part).alias("name"),
-        F.when(has_slash, F.regexp_replace(F.trim(unit_part), r"^\((.*)\)$", "$1"))
-        .otherwise(F.lit(None).cast("string"))
-        .alias("unit"),
-    )
-
-
 # ---------------------------------------------------------------------------
 # Domain micro-parsers (op_string_struct_parse)
 # ---------------------------------------------------------------------------

@@ -25,7 +25,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
-from .graph import release_local_checkpoint
+from .iterate import checkpoint, iterate, release_local_checkpoint, undirect
 
 # trim + collapse internal whitespace + lowercase; identical regex semantics
 # exist in DuckDB for the oracle side (see queries/dedup.py).
@@ -149,156 +149,27 @@ def shingle_jaccard_pairs(
     )
 
 
-def _chk(df: DataFrame, checkpoint_dir: str | None) -> DataFrame:
-    """Lineage truncation for the iterative loops below.
-
-    Default: ``localCheckpoint`` — executor-local blocks, no extra I/O, the
-    right trade on a healthy cluster.  But those blocks die with their
-    executor, and at 100 TB a 30-round star job WILL see executor loss —
-    one lost block then fails the whole job with no recompute path (the
-    lineage was truncated).  Passing ``checkpoint_dir`` switches every
-    round to a reliable ``checkpoint()`` into that directory (HDFS/S3 at
-    cluster scale), making each round restartable at the cost of one
-    write+read per round.
-    """
-    if checkpoint_dir is None:
-        return df.localCheckpoint()
-    sc = df.sparkSession.sparkContext
-    if sc.getCheckpointDir() != checkpoint_dir:
-        sc.setCheckpointDir(checkpoint_dir)
-    return df.checkpoint()
-
-
-def _symmetrize(
-    edges: DataFrame,
-    src: str,
-    dst: str,
-    edges_distinct: bool,
-    checkpoint_dir: str | None = None,
-    working_partitions: int | None = None,
-) -> DataFrame:
-    """Undirected edge list → materialized symmetric (_s, _d) edge set.
-
-    ``edges_distinct=True`` promises the input has unique pairs with
-    src < dst (true for every *_pairs operator in this package) — then the
-    union with its own reversal cannot contain duplicates and the
-    dedup shuffle is skipped entirely, saving a full pass over the edge set.
-
-    ``working_partitions`` repartitions the symmetric edge set ONCE at
-    entry, sizing every subsequent iteration round.  The dup graph is
-    usually orders of magnitude smaller than the corpus that produced it
-    (near-dup pairs ≪ documents), so inheriting the producer's
-    partitioning runs each propagation round as a cloud of near-empty
-    tasks whose launch overhead dominates (measured 5.1 s → 3.9 s on the
-    sf0.1 entity-resolution graph with 8 instead of 64).  Pick
-    ~|edges| / a few million per partition on a cluster; None keeps the
-    input partitioning.  A plain ``coalesce`` would be wrong here — it
-    folds the upstream pair-generation work into the reduced tasks.
-    """
-    # explode(array(fwd, rev)) instead of unionAll(edges, edges-reversed):
-    # the union form runs the EDGE PRODUCER twice — exchange reuse covers
-    # the subtree below the producer's last shuffle, but the per-pair
-    # compute above it (the entity-resolution Levenshtein DP, the minhash
-    # array_intersect verify) is re-executed per branch.  One pass, same
-    # row multiset (round-14 A/B: 1.40s -> 0.78s for the ER edge set).
-    sym = edges.select(
-        F.explode(
-            F.array(
-                F.struct(F.col(src).alias("_s"), F.col(dst).alias("_d")),
-                F.struct(F.col(dst).alias("_s"), F.col(src).alias("_d")),
-            )
-        ).alias("_e")
-    ).select("_e._s", "_e._d")
-    if not edges_distinct:
-        sym = sym.distinct()
-    if working_partitions:
-        sym = sym.repartition(working_partitions, "_s")
-    return _chk(sym, checkpoint_dir)
-
-
-def connected_components(
-    vertices: DataFrame,
-    edges: DataFrame,
-    id_col: str = "id",
-    src: str = "a",
-    dst: str = "b",
-    max_iter: int = 20,
-    edges_distinct: bool = False,
-    checkpoint_dir: str | None = None,
-) -> DataFrame:
-    """Connected components by iterative min-label propagation.
-
-    ``vertices``: one row per node (column ``id_col``); ``edges``: undirected
-    pairs (``src``, ``dst``).  Returns (``id_col``, ``component``) where
-    ``component`` is the smallest node id in the node's component — the
-    canonical deterministic labeling, so results are engine-comparable
-    (DuckDB oracle: recursive-CTE reachability + MIN).
-
-    Scale design: each round is one join + hash-aggregate shuffled on the
-    node id; rounds needed = graph diameter (near-dup clusters are shallow —
-    single digits).  ``localCheckpoint`` truncates lineage each round so the
-    plan doesn't grow with iterations (the classic iterative-Spark failure
-    mode), and the convergence probe reads a 1-row count, not the data.
-    For graphs with whale components, swap the propagation step for
-    large-star/small-star; the loop shell stays the same.
-    """
-    sym = _symmetrize(edges, src, dst, edges_distinct, checkpoint_dir)
-    # Only edge-touched vertices can ever change label; iterate over that
-    # subgraph only (in a real corpus non-duplicate docs dominate, so this
-    # shrinks every round's join from |corpus| to |dup-graph| rows) and
-    # union the untouched vertices back as self-labeled singletons at the
-    # end.  Round zero is folded into initialization: label = min(self,
-    # neighbors) directly — for the dominant 2-node-cluster case that is
-    # already the fixpoint, so the loop only runs confirmation rounds.
-    labels = _chk(
-        sym.groupBy("_s")
-        .agg(F.least(F.min("_d"), F.first("_s")).alias("component"))
-        .select(F.col("_s").alias("_id"), "component"),
-        checkpoint_dir,
-    )
-    labels, converged = _min_label_rounds(sym, labels, max_iter, checkpoint_dir)
-    # the final labels checkpoint no longer references the symmetric edge
-    # set — release its blocks
-    release_local_checkpoint(sym)
-    if not converged:
-        # A silent wrong answer is worse than a loud one: a component with
-        # diameter > max_iter would otherwise emit split clusters.
-        raise RuntimeError(
-            f"connected_components did not converge in {max_iter} rounds; "
-            "raise max_iter (diameter exceeds the round budget)"
-        )
-    all_labeled = vertices.select(F.col(id_col).alias("_id")).join(
-        labels, "_id", "left"
-    )
-    return all_labeled.select(
-        F.col("_id").alias(id_col),
-        F.coalesce("component", "_id").alias("component"),
-    )
-
-
 def _min_label_rounds(
     sym: DataFrame,
     labels: DataFrame,
     rounds: int,
     checkpoint_dir: str | None = None,
 ) -> tuple[DataFrame, bool]:
-    """Run up to ``rounds`` min-label propagation steps; returns
-    (labels, converged).  Each step is one join + hash-aggregate; the
-    previous label rides along through the checkpoint so convergence is read
-    back with a single cheap aggregate over the materialized step — no
-    second join against the old labels (half the per-round job cost).
+    """Run up to ``rounds`` min-label propagation steps over the symmetric
+    edge set; returns (labels, converged).  Each step is one join +
+    hash-aggregate; the previous label rides along through the checkpoint
+    as ``_old`` so convergence is read back with a single cheap probe over
+    the materialized step — no second join against the old labels (half
+    the per-round job cost)."""
 
-    Superseded label checkpoints (including the caller's initial one) have
-    their blocks released each round — without this a 30-round job pins 30
-    generations of labels in executor storage."""
-    prev_ck = labels  # the caller's initial _chk frame (root = LogicalRDD)
-    for _ in range(rounds):
+    def step(state: DataFrame) -> DataFrame:
+        labels = state.select("_id", "component")
         nbr_min = (
             sym.join(labels, sym._d == labels._id)
             .groupBy("_s")
             .agg(F.min("component").alias("_nbr_min"))
         )
-        stepped = (
+        return (
             labels.withColumnRenamed("component", "_old")
             .join(nbr_min, F.col("_id") == nbr_min._s, "left")
             .select(
@@ -309,16 +180,15 @@ def _min_label_rounds(
                 "_old",
             )
         )
-        stepped = _chk(stepped, checkpoint_dir)
+
+    def unchanged(state: DataFrame) -> bool:
         changed = (
-            stepped.filter(F.col("component") != F.col("_old")).limit(1).count()
+            state.filter(F.col("component") != F.col("_old")).limit(1).count()
         )
-        release_local_checkpoint(prev_ck)  # superseded by stepped
-        prev_ck = stepped
-        labels = stepped.select("_id", "component")
-        if changed == 0:
-            return labels, True
-    return labels, False
+        return changed == 0
+
+    state, converged = iterate(labels, step, rounds, unchanged, checkpoint_dir)
+    return state.select("_id", "component"), converged
 
 
 def connected_components_star(
@@ -334,12 +204,12 @@ def connected_components_star(
     (Kiveris et al., "Connected Components in MapReduce and Beyond" —
     public algorithm).
 
-    Same contract as :func:`connected_components` (component = min node id),
-    but converges in O(log n) rounds *regardless of graph diameter* — the
-    whale-component regime where min-label propagation needs
-    diameter-many rounds.  Each round is two join+aggregate passes over the
-    edge set; edges only ever rewire toward smaller ids, so the edge count
-    never grows beyond the symmetrized input.
+    Same contract as :func:`connected_components_auto` (component = min
+    node id), but converges in O(log n) rounds *regardless of graph
+    diameter* — the whale-component regime where min-label propagation
+    needs diameter-many rounds.  Each round is two join+aggregate passes
+    over the edge set; edges only ever rewire toward smaller ids, so the
+    edge count never grows beyond the symmetrized input.
 
       * large-star: every node u links each strictly-larger neighbor to
         m = min(N(u) ∪ {u});
@@ -355,7 +225,7 @@ def connected_components_star(
         return df.filter(F.col("_u") != F.col("_v")).distinct()
 
     def large_star(e: DataFrame) -> DataFrame:
-        sym = e.unionAll(e.select(F.col("_v").alias("_u"), F.col("_u").alias("_v")))
+        sym = undirect(e, "_u", "_v")
         m = sym.groupBy("_u").agg(
             F.least(F.min("_v"), F.first("_u")).alias("_m")
         )
@@ -376,27 +246,29 @@ def connected_components_star(
         centers = m.select(F.col("_u"), F.col("_m").alias("_v"))
         return dedup(children.unionAll(centers))
 
-    def fingerprint(e: DataFrame):
+    prev_fp = None
+
+    def unchanged(e: DataFrame) -> bool:
+        nonlocal prev_fp
         row = e.agg(
             F.count(F.lit(1)).alias("n"),
             F.expr("bit_xor(xxhash64(_u, _v))").alias("h"),
         ).collect()[0]
-        return (row["n"], row["h"])
+        fp = (row["n"], row["h"])
+        same, prev_fp = fp == prev_fp, fp
+        return same
 
-    cur = _chk(
-        dedup(edges.select(F.col(src).alias("_u"), F.col(dst).alias("_v"))),
+    first = dedup(
+        edges.select(F.col(src).alias("_u"), F.col(dst).alias("_v"))
+    )
+    cur, converged = iterate(
+        checkpoint(first, checkpoint_dir),
+        lambda e: small_star(large_star(e)),
+        max_iter,
+        unchanged,
         checkpoint_dir,
     )
-    prev_fp = None
-    for _ in range(max_iter):
-        prev_ck = cur
-        cur = _chk(small_star(large_star(cur)), checkpoint_dir)
-        fp = fingerprint(cur)
-        release_local_checkpoint(prev_ck)  # superseded by the new round
-        if fp == prev_fp:
-            break
-        prev_fp = fp
-    else:
+    if not converged:
         raise RuntimeError(
             f"connected_components_star did not converge in {max_iter} rounds"
         )
@@ -427,9 +299,12 @@ def connected_components_auto(
 ) -> DataFrame:
     """Adaptive connected components: cheap min-label propagation first,
     automatic escalation to large-star/small-star when the graph is deep.
-    ``working_partitions`` sizes the iteration working set (see
-    ``_symmetrize``): the dup graph is far smaller than the corpus, so
-    iterating at the producer's partition count runs near-empty tasks.
+
+    ``vertices``: one row per node (column ``id_col``); ``edges``: undirected
+    pairs (``src``, ``dst``).  Returns (``id_col``, ``component``) where
+    ``component`` is the smallest node id in the node's component — the
+    canonical deterministic labeling, so results are engine-comparable
+    (DuckDB oracle: recursive-CTE reachability + MIN).
 
     Near-dup graphs are overwhelmingly shallow (duplicate clusters of 2-5
     docs), where a couple of propagation rounds — one join+agg each — reach
@@ -442,12 +317,43 @@ def connected_components_auto(
     orders of magnitude smaller) and finish with the O(log n)-round star
     algorithm on the contraction.  The component minimum survives
     contraction — the min node's label is itself — so the composed labeling
-    equals what either algorithm alone would produce.
+    equals what either algorithm alone would produce.  A star stage that
+    does not converge in ``max_iter`` rounds raises: split clusters would
+    be a silent wrong answer.
+
+    ``edges_distinct=True`` promises the input has unique pairs with
+    src < dst (true for every *_pairs operator in this package) — then the
+    undirected edge set cannot contain duplicates and its dedup shuffle is
+    skipped, saving a full pass over the edge set.
+
+    ``working_partitions`` repartitions the symmetric edge set ONCE at
+    entry, sizing every subsequent round.  The dup graph is usually orders
+    of magnitude smaller than the corpus that produced it (near-dup pairs ≪
+    documents), so inheriting the producer's partitioning runs each round
+    as a cloud of near-empty tasks whose launch overhead dominates
+    (measured 5.1 s → 3.9 s on the sf0.1 entity-resolution graph with 8
+    instead of 64).  Pick ~|edges| / a few million per partition on a
+    cluster; None keeps the input partitioning.  A plain ``coalesce`` would
+    be wrong here — it folds the upstream pair-generation work into the
+    reduced tasks.
+
+    ``checkpoint_dir`` switches every round to reliable checkpoints (see
+    :func:`~lab_etl_spark.operators.iterate.checkpoint`).
     """
-    sym = _symmetrize(
-        edges, src, dst, edges_distinct, checkpoint_dir, working_partitions
-    )
-    labels = _chk(
+    sym = undirect(edges, src, dst).toDF("_s", "_d")
+    if not edges_distinct:
+        sym = sym.distinct()
+    if working_partitions:
+        sym = sym.repartition(working_partitions, "_s")
+    sym = checkpoint(sym, checkpoint_dir)
+    # Only edge-touched vertices can ever change label; iterate over that
+    # subgraph only (in a real corpus non-duplicate docs dominate, so this
+    # shrinks every round's join from |corpus| to |dup-graph| rows) and
+    # union the untouched vertices back as self-labeled singletons at the
+    # end.  Round zero is folded into initialization: label = min(self,
+    # neighbors) directly — for the dominant 2-node-cluster case that is
+    # already the fixpoint, so the loop only runs confirmation rounds.
+    labels = checkpoint(
         sym.groupBy("_s")
         .agg(F.least(F.min("_d"), F.first("_s")).alias("component"))
         .select(F.col("_s").alias("_id"), "component"),
@@ -485,6 +391,9 @@ def connected_components_auto(
             )
             .select("_id", F.col("_final").alias("component"))
         )
+    # the labels no longer reference the symmetric edge set (the star
+    # stage checkpointed its contraction first) — release its blocks
+    release_local_checkpoint(sym)
     all_labeled = vertices.select(F.col(id_col).alias("_id")).join(
         labels, "_id", "left"
     )

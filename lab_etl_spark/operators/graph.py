@@ -1,4 +1,5 @@
-"""Join-based iterative graph algorithms (PageRank).
+"""Join-based iterative graph algorithms (PageRank, k-core, label
+propagation).
 
 Complements the connected-components family in operators/dedup.py: CC covers
 converge-by-fixpoint label propagation; PageRank is the fixed-iteration
@@ -17,9 +18,9 @@ DuckDB oracle that unrolls the same iterations.
 
 Scale: each iteration is one join (edges ⋈ ranks, both hash-partitioned on
 src — AQE reuses the layout) plus one aggregation shuffled on dst.  For long
-iteration counts, persist/checkpoint `edges` and truncate rank lineage the
-way operators/dedup.py does; for the fixed small iteration counts used here
-the composed plan is fine.
+iteration counts, persist `edges` and run the ranks through the loop shell
+(operators/iterate.py); for the fixed small iteration counts used here the
+composed plan is fine.
 """
 
 from __future__ import annotations
@@ -27,6 +28,8 @@ from __future__ import annotations
 from pyspark.sql import DataFrame
 from pyspark.sql import Window
 from pyspark.sql import functions as F
+
+from .iterate import checkpoint, iterate, release_local_checkpoint, undirect
 
 #: exact accumulator for rank contributions — same SQL text runs in DuckDB
 CONTRIB_SUM = "CAST(SUM(CAST((pr / d) AS DECIMAL(38,9))) AS DOUBLE)"
@@ -51,9 +54,9 @@ def pagerank(
     materialized via ``localCheckpoint`` and the cached blocks released
     before returning, so repeated invocations in one long session leave no
     session-lifetime cache footprint (the returned frame reads checkpoint
-    blocks, not the persisted inputs).  Result size is O(|vertices|); swap
-    to a reliable ``checkpoint`` dir for executor-loss resilience the way
-    operators/dedup.py does if iterating on a real cluster.
+    blocks, not the persisted inputs).  Result size is O(|vertices|); for
+    executor-loss resilience on a real cluster, run the ranks through
+    operators/iterate.py's ``iterate`` with a reliable ``checkpoint_dir``.
     """
     edges = edges.persist()
     deg = edges.groupBy("src").agg(F.count(F.lit(1)).alias("d")).persist()
@@ -138,44 +141,6 @@ def degree_oriented_wedges(edges: DataFrame) -> DataFrame:
     )
 
 
-def release_local_checkpoint(df: DataFrame) -> None:
-    """Free the cached blocks behind an eagerly ``localCheckpoint``'ed
-    frame.
-
-    ``DataFrame.unpersist`` only talks to the SQL cache manager, so the
-    RDD blocks backing a localCheckpoint are never released by it — the
-    leak the iterative operators here would otherwise accumulate one
-    frontier per round.  This reaches the ``LogicalRDD``'s internal RDD
-    (guarded: a no-op on any plan that is not a checkpoint scan).  Call
-    ONLY on superseded frames — the frame cannot be recomputed afterwards
-    because its lineage was truncated at checkpoint time.
-    """
-    try:
-        plan = df._jdf.queryExecution().analyzed()
-        if plan.nodeName() == "LogicalRDD":
-            plan.rdd().unpersist(False)
-    except Exception:  # pragma: no cover — internal-API drift tolerance
-        pass
-
-
-def _undirect(edges: DataFrame) -> DataFrame:
-    """(p1, p2) id-ordered edge list → both-direction (a, b) rows in ONE
-    pass: ``explode(array(fwd, rev))`` instead of
-    ``unionAll(edges, edges-reversed)``, whose two branches re-run the
-    edge producer's post-shuffle compute (the co-purchase support count
-    reduce, or anything a caller derives above its last exchange).  Same
-    row multiset (operators/dedup.py ``_symmetrize`` carries the same
-    rewrite with the round-14 A/B numbers)."""
-    return edges.select(
-        F.explode(
-            F.array(
-                F.struct(F.col("p1").alias("a"), F.col("p2").alias("b")),
-                F.struct(F.col("p2").alias("a"), F.col("p1").alias("b")),
-            )
-        ).alias("_e")
-    ).select("_e.a", "_e.b")
-
-
 def kcore(edges: DataFrame, k: int, rounds: int) -> DataFrame:
     """Synchronous k-core peeling over an undirected id-ordered edge list
     ``(p1, p2)``: repeatedly drop vertices whose degree within the
@@ -188,55 +153,38 @@ def kcore(edges: DataFrame, k: int, rounds: int) -> DataFrame:
     (tests pin fixpoint at the shipped R for the shipped corpus; the
     registered query's DuckDB oracle unrolls the identical rounds as a
     CTE chain).  Each round is one degree aggregation + two semi-joins;
-    the surviving-vertex set is localCheckpoint'ed per round so lineage
-    stays O(1) instead of O(rounds) — the connected-components
-    discipline (operators/dedup.py).  At 100x scale the round count
-    grows with peel depth, not graph size, and each round's shuffles are
-    keyed by vertex — the standard distributed formulation.
+    the surviving (v, deg) set is checkpointed per round by the loop
+    shell (operators/iterate.py), so lineage stays O(1) instead of
+    O(rounds).  At 100x scale the round count grows with peel depth, not
+    graph size, and each round's shuffles are keyed by vertex — the
+    standard distributed formulation.
     """
     if rounds < 1:
         raise ValueError(
             "kcore requires rounds >= 1 (a 0-round peel would be the "
             "plain degree table — compute that directly)"
         )
-    und = _undirect(edges).localCheckpoint(eager=True)
+    und = checkpoint(undirect(edges, "p1", "p2").toDF("a", "b"))
 
-    def _deg(frontier: DataFrame) -> DataFrame:
+    def peel(frontier: DataFrame) -> DataFrame:
+        f = frontier.select("v")
         return (
-            und.join(frontier, und.a == frontier.v)
+            und.join(f, und.a == f.v)
             .drop("v")
             .join(
-                frontier.select(F.col("v").alias("_vb")),
+                f.select(F.col("v").alias("_vb")),
                 F.col("b") == F.col("_vb"),
             )
             .groupBy(F.col("a").alias("v"))
             .agg(F.count(F.lit(1)).alias("deg"))
+            .filter(F.col("deg") >= k)
         )
 
-    cur = und.select(F.col("a").alias("v")).distinct()
-    deg = None
-    for r in range(rounds):
-        deg = _deg(cur)
-        if r < rounds - 1:
-            nxt = (
-                deg.filter(F.col("deg") >= k)
-                .select("v")
-                .localCheckpoint(eager=True)
-            )
-            # the frontier deg consumed is superseded the moment nxt is
-            # eagerly materialized (round 0's frontier is a lazy distinct
-            # — the release helper no-ops on it)
-            release_local_checkpoint(cur)
-            cur = nxt
-    out = (
-        deg.filter(F.col("deg") >= k)
-        .select("v", "deg")
-        .localCheckpoint(eager=True)
-    )
-    # out is materialized: the last frontier and the symmetrized edge
-    # cache are no longer needed — release their blocks (pagerank's
-    # no-session-lifetime-footprint contract)
-    release_local_checkpoint(cur)
+    frontier = und.select(F.col("a").alias("v")).distinct()
+    out, _ = iterate(frontier, peel, rounds)
+    # out is materialized: the symmetrized edge cache is no longer needed
+    # — release its blocks (pagerank's no-session-lifetime-footprint
+    # contract)
     release_local_checkpoint(und)
     return out
 
@@ -256,7 +204,8 @@ def label_propagation(edges: DataFrame, rounds: int) -> DataFrame:
     chain).  Each round is one edge⋈label join (vertex-keyed shuffle),
     one (v, label) count aggregation, and one per-vertex argmax window —
     all keyed by vertex id, so a round costs O(|E|/p) per partition at
-    any scale; labels localCheckpoint per round to keep lineage O(1).
+    any scale; the loop shell checkpoints the labels per round to keep
+    lineage O(1).
     """
     if rounds < 1:
         raise ValueError(
@@ -265,27 +214,23 @@ def label_propagation(edges: DataFrame, rounds: int) -> DataFrame:
             "the undirected edge frame, whose checkpoint blocks are "
             "released below — collecting it would then fail)"
         )
-    und = _undirect(edges).localCheckpoint(eager=True)
-    labels = und.select(F.col("a").alias("v")).distinct().select(
-        "v", F.col("v").alias("label")
-    )
+    und = checkpoint(undirect(edges, "p1", "p2").toDF("a", "b"))
     w = Window.partitionBy("v").orderBy(F.desc("c"), F.asc("label"))
-    for _ in range(rounds):
-        cnt = (
+
+    def adopt(labels: DataFrame) -> DataFrame:
+        return (
             und.join(labels.select(F.col("v").alias("b2"), "label"),
                      F.col("b") == F.col("b2"))
             .groupBy(F.col("a").alias("v"), "label")
             .agg(F.count(F.lit(1)).alias("c"))
-        )
-        prev = labels
-        labels = (
-            cnt.withColumn("rn", F.row_number().over(w))
+            .withColumn("rn", F.row_number().over(w))
             .filter(F.col("rn") == 1)
             .select("v", "label")
-            .localCheckpoint(eager=True)
         )
-        # prev is superseded once the new labels are materialized (round
-        # 0's prev is the lazy id-label seed — the helper no-ops on it)
-        release_local_checkpoint(prev)
+
+    seed = und.select(F.col("a").alias("v")).distinct().select(
+        "v", F.col("v").alias("label")
+    )
+    labels, _ = iterate(seed, adopt, rounds)
     release_local_checkpoint(und)
     return labels

@@ -21,6 +21,8 @@ from pyspark.sql import DataFrame
 from pyspark.sql import Window as W
 from pyspark.sql import functions as F
 
+from .iterate import checkpoint, iterate, undirect
+
 # Sequential double fold: dot(a, b) and ||v||².
 DOT = (
     "aggregate(zip_with({a}, {b}, (x, y) -> CAST(x AS DOUBLE) * CAST(y AS DOUBLE)),"
@@ -203,9 +205,11 @@ def ivf_assign(
     The centroid table stays O(n_clusters × dim) — always broadcastable —
     so the corpus is never shuffled during training; only the tiny
     per-dimension partial sums move.  Centroids and the final assignment
-    are localCheckpoint'ed: without that, every downstream reference
-    (probe cross-join, candidate scoring) re-executes the whole Lloyd
-    lineage — measured as 20 parquet scans of the corpus in one plan.
+    are localCheckpoint'ed (the Lloyd steps run through the loop shell,
+    operators/iterate.py, which also releases superseded centroids):
+    without that, every downstream reference (probe cross-join, candidate
+    scoring) re-executes the whole Lloyd lineage — measured as 20 parquet
+    scans of the corpus in one plan.
 
     Returns ``(assigned_corpus, centroids)``: the corpus with a ``cid``
     cluster-id column, and the (cid, c_emb) centroid table.
@@ -234,26 +238,25 @@ def ivf_assign(
         F.expr("transform(c_emb, x -> CAST(x AS DOUBLE))").alias("c_emb"),
     )
 
-    def nearest(df: DataFrame) -> DataFrame:
-        dot = F.expr(DOT.format(a="emb_d", b="c_emb"))
-        cnorm = F.expr(f"SQRT({SQNORM.format(v='c_emb')})")
-        cos = F.try_divide(dot, F.col("q_norm") * cnorm)
-        return (
-            df.crossJoin(F.broadcast(centroids))
-            .groupBy("vec_id")
-            .agg(F.min_by("cid", F.struct(-cos, F.col("cid"))).alias("cid"))
-        )
-
     prepared = corpus.select(
         "vec_id",
         F.expr("transform(embedding, x -> CAST(x AS DOUBLE))").alias("emb_d"),
         F.col("_nrm").alias("q_norm"),
     )
-    centroids = centroids.localCheckpoint()
-    for _ in range(n_iter):
-        assigned = nearest(prepared)
-        centroids = (
-            prepared.join(assigned, "vec_id")
+
+    def nearest(centroids: DataFrame) -> DataFrame:
+        dot = F.expr(DOT.format(a="emb_d", b="c_emb"))
+        cnorm = F.expr(f"SQRT({SQNORM.format(v='c_emb')})")
+        cos = F.try_divide(dot, F.col("q_norm") * cnorm)
+        return (
+            prepared.crossJoin(F.broadcast(centroids))
+            .groupBy("vec_id")
+            .agg(F.min_by("cid", F.struct(-cos, F.col("cid"))).alias("cid"))
+        )
+
+    def lloyd(centroids: DataFrame) -> DataFrame:
+        return (
+            prepared.join(nearest(centroids), "vec_id")
             .select("cid", F.posexplode("emb_d").alias("pos", "x"))
             .groupBy("cid", "pos")
             .agg(F.avg("x").alias("m"))
@@ -264,9 +267,10 @@ def ivf_assign(
                     " s -> s.m)"
                 ).alias("c_emb")
             )
-            .localCheckpoint()
         )
-    final = nearest(prepared).localCheckpoint()
+
+    centroids, _ = iterate(checkpoint(centroids), lloyd, n_iter)
+    final = checkpoint(nearest(centroids))
     return corpus.drop("_nrm").join(final, "vec_id"), centroids
 
 
@@ -834,9 +838,7 @@ def graph_ann_topk(
         F.col("cell").alias("src"), F.col("vec_id").alias("dst")
     ).filter(F.col("src") != F.col("dst"))
     edges = (
-        knn.unionByName(
-            knn.select(F.col("dst").alias("src"), F.col("src").alias("dst"))
-        )
+        undirect(knn, "src", "dst")
         .unionByName(descent)
         .distinct()
         .persist()  # O(n·(m+1)) rows referenced by every unrolled hop —

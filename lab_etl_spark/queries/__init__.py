@@ -100,49 +100,38 @@ def register(
 # Every name listed here is green in the local twin at sf0.01, so promoting
 # it into the checked prefix is low-risk.
 _WINDOW_FRONT = [
-    # round 14: no r13 reds (ninth consecutive 50/50) — the window is a
-    # pure staleness drain: the 21 r9 spillovers (q_abtest_cuped,
-    # q_audio_fingerprint, q_bigram_novelty, q_bm25, q_changepoint,
-    # q_cooccurrence_pmi, q_embedding_quantize, q_forecast_revenue,
-    # q_image_resize, q_kmeans_lloyd, q_mutual_information,
-    # q_parts_supplier_count, q_phash_dedup, q_potential_promotion,
-    # q_random_projection, q_scd2_lookup, q_shipmode_priority,
-    # q_skyline_2d, q_video_frames, q_volume_shipping,
-    # q_zorder_skipping) enter via _LAST_GREEN order, then the r10
-    # cohort by staleness.  Entries appended here during the round are
-    # queries whose ENGINE text changed in this optimization round (the
-    # oracle strings are frozen; a rewritten engine must see a driver
-    # row against its unchanged oracle before the round ends).
-    # Round-14 engine changes: one-pass explode symmetrize
-    # (operators/dedup.py `_symmetrize`, operators/graph.py `_undirect`)
-    # + banded threshold Levenshtein (queries/advanced.py) + graph_ann
-    # hops=0 guard (operators/similarity.py; default path plan-identical
-    # but the operator file changed).
-    "q_entity_resolution",
-    "q_fuzzy_match",
+    # round 15: the window restarts from the engine-changed queries of
+    # this round's loop-shell refactor (operators/iterate.py: one
+    # `iterate` shell and one `undirect` helper for the connected-
+    # components, k-core, label-propagation and IVF Lloyd loops, plus
+    # the BFS and graph-ANN edge symmetrization), then the staleness
+    # drain through _LAST_GREEN order: the r10 cohort first, then r11.
     "q_dedup_clusters",
+    "q_entity_resolution",
     "q_kcore",
     "q_label_propagation",
+    "q_shortest_path",
     "q_graph_ann",
+    "q_similarity_ivf",
 ]
 
 # Last driver-GREEN round per query, mechanically derived from
-# CORRECTNESS_r01..r12.json via tools/regen_last_green.py (hash_match
+# CORRECTNESS_r01..r14.json via tools/regen_last_green.py (hash_match
 # true, or rows-only with rows returned).  Orders the veteran fill of
 # the window: stalest first.  Queries absent from this map have never
 # been driver-checked and sort ahead of all veterans automatically.
 _LAST_GREEN = {
-    "q_dedup_exact": 10, "q_dedup_ngram_jaccard": 10,
-    "q_dedup_minhash_lsh": 10, "q_dedup_clusters": 10, "q_dedup_simhash": 10,
+    "q_dedup_exact": 14, "q_dedup_ngram_jaccard": 14,
+    "q_dedup_minhash_lsh": 14, "q_dedup_clusters": 14, "q_dedup_simhash": 14,
     "q_dedup_embedding": 11, "q_instrument_peak_hrr": 12,
-    "q_instrument_sta_mass_loss": 13, "q_filter_project": 10,
-    "q_pricing_summary": 10, "q_agg_group": 10, "q_agg_distinct": 10,
-    "q_approx_distinct": 13, "q_shipping_priority": 10,
-    "q_local_supplier_volume": 10, "q_hash_join_inner": 10,
-    "q_broadcast_join": 10, "q_semi_join": 10, "q_anti_join": 11,
-    "q_range_join": 10, "q_window_rank": 10, "q_window_frame": 10,
-    "q_sort_limit_topk": 10, "q_set_ops": 10, "q_scalar_fns": 10,
-    "q_array_fns": 10, "q_map_fns": 10, "q_skew_join_salted": 10,
+    "q_instrument_sta_mass_loss": 13, "q_filter_project": 14,
+    "q_pricing_summary": 14, "q_agg_group": 14, "q_agg_distinct": 14,
+    "q_approx_distinct": 13, "q_shipping_priority": 14,
+    "q_local_supplier_volume": 14, "q_hash_join_inner": 14,
+    "q_broadcast_join": 14, "q_semi_join": 14, "q_anti_join": 11,
+    "q_range_join": 14, "q_window_rank": 14, "q_window_frame": 14,
+    "q_sort_limit_topk": 14, "q_set_ops": 14, "q_scalar_fns": 14,
+    "q_array_fns": 14, "q_map_fns": 10, "q_skew_join_salted": 10,
     "q_shuffle_hash_join": 10, "q_outer_join": 10, "q_scalar_subquery": 10,
     "q_pivot_wide": 10, "q_unpivot": 10, "q_grouping_sets": 10,
     "q_percentile_exact": 10, "q_deterministic_sample": 10,
@@ -150,7 +139,7 @@ _LAST_GREEN = {
     "q_similarity_ivf": 11, "q_text_stats": 11, "q_text_quality": 11,
     "q_text_fingerprint": 11, "q_token_histogram": 11,
     "q_text_tokens_bpe": 11, "q_text_rolling_hash": 11, "q_lang_id_ngram": 12,
-    "q_stream_tumbling": 11, "q_rollup_cube": 10, "q_stream_session": 11,
+    "q_stream_tumbling": 11, "q_rollup_cube": 14, "q_stream_session": 11,
     "q_stream_sliding": 11, "q_asof_align": 11, "q_interp_linear": 11,
     "q_interp_by_key": 11, "q_interval_join": 11, "q_zscore_anomaly": 12,
     "q_stratified_sample": 12, "q_seq_packing": 12, "q_training_shuffle": 12,
@@ -168,47 +157,47 @@ _LAST_GREEN = {
     "q_small_qty_revenue": 11, "q_idle_customers": 11,
     "q_nation_year_profit": 12, "q_disjunctive_join": 12,
     "q_multimodal_decode": 13, "q_window_distribution": 12,
-    "q_zorder_skipping": 9, "q_frequent_ngrams": 12, "q_argmin_join": 12,
+    "q_zorder_skipping": 14, "q_frequent_ngrams": 12, "q_argmin_join": 12,
     "q_exists_agg": 12, "q_sole_supplier_wait": 12, "q_global_share": 12,
     "q_scd2_build": 12, "q_vocab_oov": 12, "q_source_mix_weights": 12,
     "q_cdc_merge": 12, "q_pagerank": 12, "q_event_pattern": 12,
-    "q_schema_evolution": 12, "q_null_semantics": 12, "q_fuzzy_match": 12,
+    "q_schema_evolution": 12, "q_null_semantics": 12, "q_fuzzy_match": 14,
     "q_doc_chunking": 12, "q_group_sample": 12, "q_robust_stats": 12,
-    "q_entity_resolution": 12, "q_hll_rollup": 10, "q_forecast_revenue": 9,
-    "q_volume_shipping": 9, "q_shipmode_priority": 9,
-    "q_parts_supplier_count": 9, "q_potential_promotion": 9,
+    "q_entity_resolution": 14, "q_hll_rollup": 14, "q_forecast_revenue": 14,
+    "q_volume_shipping": 14, "q_shipmode_priority": 14,
+    "q_parts_supplier_count": 14, "q_potential_promotion": 14,
     "q_commitlog_roundtrip": 12, "q_heavy_hitters_cms": 12,
     "q_kmv_distinct": 12, "q_bloom_join_prune": 12, "q_triangle_count": 12,
     "q_ewma_batch": 13, "q_rolling_1h": 13, "q_bucketed_join": 13,
     "q_partition_pruning": 13, "q_incremental_agg": 13, "q_linreg_trend": 10,
     "q_time_travel": 13, "q_user_purge": 13, "q_histogram": 13,
     "q_data_quality": 13, "q_curation_pipeline": 13, "q_stream_cms_merge": 12,
-    "q_orc_roundtrip": 13, "q_video_frames": 9, "q_sql_udf": 13,
-    "q_scd2_lookup": 9, "q_dynamic_partition_pruning": 13,
+    "q_orc_roundtrip": 13, "q_video_frames": 14, "q_sql_udf": 13,
+    "q_scd2_lookup": 14, "q_dynamic_partition_pruning": 13,
     "q_date_spine_fill": 12, "q_rfm_segmentation": 12,
     "q_gini_concentration": 12, "q_jsonl_roundtrip": 10,
     "q_corrupt_records": 10, "q_setsim_join": 13, "q_dedup_passages": 13,
-    "q_dedup_containment": 13, "q_bm25": 9, "q_cooccurrence_pmi": 9,
-    "q_bigram_novelty": 9, "q_udtf_token_offsets": 13, "q_stats_pruning": 13,
+    "q_dedup_containment": 13, "q_bm25": 14, "q_cooccurrence_pmi": 14,
+    "q_bigram_novelty": 14, "q_udtf_token_offsets": 13, "q_stats_pruning": 13,
     "q_point_lookup_bloom": 13, "q_xml_roundtrip": 13, "q_kmv_intersect": 13,
     "q_shortest_path": 13, "q_weighted_sample": 13, "q_negative_sampling": 13,
-    "q_embedding_quantize": 9, "q_corr_matrix": 13, "q_changepoint": 9,
+    "q_embedding_quantize": 14, "q_corr_matrix": 13, "q_changepoint": 14,
     "q_attribution": 10, "q_seasonal_decompose": 10, "q_anomaly_seasonal": 10,
     "q_stream_enrich": 10, "q_top_movers": 10, "q_transition_matrix": 10,
     "q_market_basket": 13, "q_recursive_cte": 13, "q_dtw_distance": 10,
-    "q_phash_dedup": 9, "q_audio_fingerprint": 9, "q_image_resize": 9,
+    "q_phash_dedup": 14, "q_audio_fingerprint": 14, "q_image_resize": 14,
     "q_unigram_logprob": 13, "q_feature_hashing": 13, "q_kl_divergence": 13,
-    "q_bpe_train": 13, "q_stream_dedup": 13, "q_kcore": 13,
+    "q_bpe_train": 13, "q_stream_dedup": 13, "q_kcore": 14,
     "q_hll_portable": 13, "q_quantile_histogram": 13,
-    "q_label_propagation": 13, "q_lsh_recall": 13, "q_dp_counts": 13,
-    "q_bootstrap_ci": 13, "q_kanonymity": 13, "q_mutual_information": 9,
-    "q_skyline_2d": 9, "q_abtest_cuped": 9, "q_random_projection": 9,
-    "q_kmeans_lloyd": 9, "q_rrf_fusion": 11, "q_acf": 10,
+    "q_label_propagation": 14, "q_lsh_recall": 13, "q_dp_counts": 13,
+    "q_bootstrap_ci": 13, "q_kanonymity": 13, "q_mutual_information": 14,
+    "q_skyline_2d": 14, "q_abtest_cuped": 14, "q_random_projection": 14,
+    "q_kmeans_lloyd": 14, "q_rrf_fusion": 11, "q_acf": 10,
     "q_arrow_roundtrip": 11, "q_attribution_markov": 11,
     "q_funnel_windowed": 11, "q_interval_merge": 11, "q_langid_confusion": 11,
     "q_ntile_binning": 11, "q_webdataset_roundtrip": 11,
-    "q_bottomk_quantile": 10, "q_semdedup": 12, "q_pq_adc": 11,
-    "q_importance_resampling": 11, "q_semdedup_kmeans": 11, "q_graph_ann": 11,
+    "q_bottomk_quantile": 14, "q_semdedup": 12, "q_pq_adc": 11,
+    "q_importance_resampling": 11, "q_semdedup_kmeans": 11, "q_graph_ann": 14,
     "q_dedup_incremental": 12, "q_delta_export": 13,
     "q_embedding_quality": 10, "q_parquet_footer_stats": 11,
     "q_footer_pruned_scan": 11, "q_stream_running_stats": 11,
@@ -216,11 +205,11 @@ _LAST_GREEN = {
     "q_cdf_consumer": 13,
 }
 
-# ROUND-15 ROTATION DUTY: regenerate _LAST_GREEN from CORRECTNESS_r01..r14
-# (tools/regen_last_green.py), front any round-14 red rows plus
-# promoted/changed oracles, then continue the staleness cycle: after
-# round 14 the oldest cohort is the r10 veterans, then r11 by
-# staleness.  The invariant is SELF-ENFORCING:
+# ROUND-16 ROTATION DUTY: regenerate _LAST_GREEN from CORRECTNESS_r01..r15
+# (tools/regen_last_green.py), front any round-15 red rows plus
+# promoted/changed oracles, then continue the staleness cycle: the r10
+# and r11 veterans that round 15's window could not hold come first,
+# then the rest of r11 by staleness.  The invariant is SELF-ENFORCING:
 # tests/test_static_audits.py::test_window_staleness_invariant fails if
 # any registered query too stale to wait another round is left outside
 # the upcoming 50-entry window.  Pre-flight with

@@ -1258,7 +1258,8 @@ def q_entity_resolution(spark: SparkSession, sf_dir: str) -> DataFrame:
         dst="pb",
         edges_distinct=True,
         # ~220k-edge dup graph at sf0.1: iterate at edge-set size, not at
-        # the pair-producer's 64 partitions (see _symmetrize docstring)
+        # the pair-producer's 64 partitions (see the working_partitions
+        # note in the connected_components_auto docstring)
         working_partitions=8,
     ).withColumnRenamed("component", "entity_id")
     return (

@@ -693,18 +693,19 @@ BFS_MAX_HOPS = 3
     tags=["graph"],
 )
 def q_shortest_path(spark: SparkSession, sf_dir: str) -> DataFrame:
+    from ..operators.iterate import undirect
+
     # The symmetrized edge list feeds the seed aggregate plus one join per
     # hop; unpersisted, Spark re-derives the whole edge pipeline (scan →
     # posting lists → pair counts → support filter) four times — measured
     # 3.1 s → 1.3 s at sf0.1 with the pagerank persistence discipline
     # (operators/graph.py): persist the edges, materialize the result via
     # eager localCheckpoint, release the cached blocks before returning.
-    edges = copurchase_edges(spark, sf_dir)
-    sym = edges.select(
-        F.col("p1").alias("src"), F.col("p2").alias("dst")
-    ).unionAll(
-        edges.select(F.col("p2").alias("src"), F.col("p1").alias("dst"))
-    ).persist()
+    sym = (
+        undirect(copurchase_edges(spark, sf_dir), "p1", "p2")
+        .toDF("src", "dst")
+        .persist()
+    )
     dist = (
         sym.agg(F.min("src").alias("node"))
         .select("node", F.lit(0).alias("dist"))

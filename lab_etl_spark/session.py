@@ -77,9 +77,15 @@ def get_spark(app_name: str = "lab_etl_spark") -> SparkSession:
     # Conf overrides without code edits (A/B experiments, cluster
     # deployments): semicolon-separated k=v pairs, applied LAST so they
     # win over the defaults above.  Empty/unset is the shipped default.
+    # An item without "=" or with an empty key fails loudly instead of
+    # silently setting a conf nobody asked for.
     extra = os.environ.get("SPARK_GRAFT_EXTRA_CONF", "")
     for item in filter(None, (s.strip() for s in extra.split(";"))):
-        k, _, v = item.partition("=")
+        k, eq, v = item.partition("=")
+        if not eq or not k.strip():
+            raise ValueError(
+                f"SPARK_GRAFT_EXTRA_CONF item {item!r} is not key=value"
+            )
         builder = builder.config(k.strip(), v.strip())
     spark = builder.getOrCreate()
     spark.sparkContext.setLogLevel("WARN")

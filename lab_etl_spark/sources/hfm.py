@@ -24,7 +24,6 @@ from typing import Any
 
 import pandas as pd
 from pyspark.sql import DataFrame, SparkSession
-from pyspark.sql import functions as F
 from pyspark.sql.types import (
     DoubleType,
     IntegerType,
@@ -270,17 +269,4 @@ def scan_hfm(spark: SparkSession, path_glob: str) -> DataFrame:
         binary.select("path", "content")
         .mapInPandas(hfm_parse_batch, _SCAN_SCHEMA)
         .transform(apply_hfm_units)
-    )
-
-
-def conductivity_table(df: DataFrame) -> DataFrame:
-    """Project a unified scan down to the reference's conductivity schema
-    (fox_hfm_parser.py:421-429)."""
-    return df.filter(F.col("run_mode") == "conductivity").select(
-        "source_file",
-        "setpoint",
-        "upper_temperature",
-        "lower_temperature",
-        "upper_thermal_conductivity",
-        "lower_thermal_conductivity",
     )

@@ -112,10 +112,7 @@ def test_connected_components_reliable_checkpoint_mode(spark, tmp_path):
     # checkpoint_dir switches every iterative round from executor-local
     # localCheckpoint blocks to reliable checkpoint() files; labels must be
     # identical in both modes and the directory must actually be used.
-    from lab_etl_spark.operators.dedup import (
-        connected_components,
-        connected_components_auto,
-    )
+    from lab_etl_spark.operators.dedup import connected_components_auto
 
     verts = spark.range(0, 12).withColumnRenamed("id", "id")
     # two chains (0-1-2-3, 4-5-6-7) deep enough to force auto's escalation
@@ -126,12 +123,14 @@ def test_connected_components_reliable_checkpoint_mode(spark, tmp_path):
     ckdir = str(tmp_path / "cc_ck")
     base = sorted(
         (r.id, r.component)
-        for r in connected_components(verts, edges, max_iter=10).collect()
+        for r in connected_components_auto(
+            verts, edges, propagation_rounds=10
+        ).collect()
     )
     reliable = sorted(
         (r.id, r.component)
-        for r in connected_components(
-            verts, edges, max_iter=10, checkpoint_dir=ckdir
+        for r in connected_components_auto(
+            verts, edges, propagation_rounds=10, checkpoint_dir=ckdir
         ).collect()
     )
     assert reliable == base

@@ -339,8 +339,8 @@ _SWEEP_SKIP = {
     "q_pagerank",
     "q_shortest_path",
     "q_triangle_count",  # edges + oriented edges checkpointed (reused 3x/2x)
-    "q_kcore",  # per-round frontier localCheckpoint (CC discipline)
-    "q_label_propagation",  # per-round label localCheckpoint (CC discipline)
+    "q_kcore",  # per-round frontier checkpoint (operators/iterate.py)
+    "q_label_propagation",  # per-round label checkpoint (operators/iterate.py)
     "q_mutual_information",  # joint-count table checkpointed (reused 4x)
     "q_attribution_markov",  # per-iteration chain checkpoints (kcore discipline)
 }

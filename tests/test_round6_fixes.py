@@ -12,11 +12,8 @@ import pytest
 from pyspark.sql import functions as F
 
 from lab_etl_spark.operators.commitlog import LoggedTable, _canon_stat
-from lab_etl_spark.operators.graph import (
-    kcore,
-    label_propagation,
-    release_local_checkpoint,
-)
+from lab_etl_spark.operators.graph import kcore, label_propagation
+from lab_etl_spark.operators.iterate import release_local_checkpoint
 
 
 def _edges(spark):
@@ -71,6 +68,63 @@ def test_label_propagation_releases_superseded_checkpoint_blocks(spark):
     )
     release_local_checkpoint(out)
     assert _persistent_ids(spark) & new == set()
+
+
+def _cc_toy(spark):
+    # 5 edges: a diameter-3 chain (0-1-2-3) plus two pairs.  Default
+    # propagation (3 rounds) converges; one round leaves the chain open.
+    v = spark.range(10)
+    e = spark.createDataFrame(
+        [(0, 1), (1, 2), (2, 3), (4, 5), (6, 7)], "a bigint, b bigint"
+    )
+    return v, e
+
+
+@pytest.mark.parametrize(
+    "propagation_rounds, kept",
+    [
+        (3, 1),  # converged: only the final label state
+        (1, 2),  # escalated: the label state + the star stage's fixpoint
+    ],
+)
+def test_connected_components_auto_releases_superseded_blocks(
+    spark, propagation_rounds, kept
+):
+    from lab_etl_spark.operators.dedup import connected_components_auto
+
+    before = _persistent_ids(spark)
+    out = connected_components_auto(
+        *_cc_toy(spark), propagation_rounds=propagation_rounds
+    )
+    got = {r.id: r.component for r in out.collect()}
+    assert got == {
+        0: 0, 1: 0, 2: 0, 3: 0, 4: 4, 5: 4, 6: 6, 7: 6, 8: 8, 9: 9
+    }
+    new = _persistent_ids(spark) - before
+    # the symmetric edge set, the initial labels and every superseded
+    # round are released; only what the returned frame reads remains
+    assert len(new) == kept, (
+        f"connected_components_auto kept {len(new)} new persistent RDDs "
+        f"(expected {kept})"
+    )
+
+
+def test_ivf_assign_releases_superseded_centroids(spark, sf_dir):
+    from lab_etl_spark.catalog import load_table
+    from lab_etl_spark.operators.similarity import ivf_assign
+
+    before = _persistent_ids(spark)
+    assigned, centroids = ivf_assign(
+        load_table(spark, sf_dir, "embeddings"), n_clusters=8, n_iter=1
+    )
+    assert centroids.count() == 8
+    assert assigned.select("cid").distinct().count() <= 8
+    new = _persistent_ids(spark) - before
+    # the seed centroids are superseded by the Lloyd step: only the
+    # trained centroids and the final assignment may remain
+    assert len(new) == 2, (
+        f"ivf_assign kept {len(new)} new persistent RDDs (expected 2)"
+    )
 
 
 def test_canon_stat_typed_string_column_stays_lexicographic():
